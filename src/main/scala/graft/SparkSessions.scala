@@ -18,10 +18,7 @@ import org.apache.spark.sql.SparkSession
  *  - AQE + coalesce + skew-join + 128 MB scan partitions: Spark 4 defaults,
  *    pinned here so a deployment-side conf file can't silently regress them
  *    (the reference pins the same AQE flags, spark/app.py:20–22).
- *  - RocksDB state store (streaming): dedup keys, open windows, sessions
- *    and join buffers spill off-heap to local disk instead of living on the
- *    JVM heap. NOTE: the provider is recorded in the checkpoint and cannot
- *    change across restarts — it only takes effect for NEW checkpoints.
+ *  - streaming: the [[Streaming]] map (rationale on the map).
  *  - UTC session timezone: zone-independent, oracle-comparable timestamps.
  *  - runtime bloom-filter injection OFF: the rule sizes the application
  *    side from plan statistics, and this engine's shared snapshot
@@ -38,6 +35,51 @@ import org.apache.spark.sql.SparkSession
  *    inferred reductions over well-statted scans.
  */
 object SparkSessions {
+
+  /** The state-store and checkpoint conf every streaming session gets
+    * (`recommended(streaming = true)` applies it; tests that exercise the
+    * shipped streaming config set exactly this map). Each micro-batch of a
+    * checkpointed query writes an offset-log entry, a commit-log entry, a
+    * sink-log entry and one state file per partition of each stateful
+    * operator, so on small batches these writes, not the data work, set
+    * the batch floor.
+    *
+    *  - RocksDB state store: dedup keys, open windows, sessions and join
+    *    buffers live off-heap on local disk instead of on the JVM heap.
+    *    The provider is recorded in the checkpoint and cannot change across
+    *    restarts — it only takes effect for NEW checkpoints.
+    *  - changelog checkpointing: a state commit uploads one changelog file
+    *    per partition (the batch's puts and deletes) instead of a zipped
+    *    RocksDB snapshot; snapshots are taken in the background every
+    *    `minDeltasForSnapshot` versions. Commit cost then scales with the
+    *    batch, not the state.
+    *  - FileSystem-based checkpoint writer: Spark's default writer goes
+    *    through Hadoop's `FileContext`, whose local path, without Hadoop
+    *    native IO (`NativeIO.isAvailable = false`, the stock jars), forks a
+    *    `chmod`/`stat` process for every file it creates or renames. On a
+    *    4-core Linux host (JDK 17, Hadoop 3.4.2) one atomic checkpoint
+    *    write cost about 40 ms and 20 process forks that way, and about
+    *    9 ms and 4 forks through the `FileSystem` API; a micro-batch of
+    *    the reference pipeline makes dozens of such writes (four logs plus
+    *    state files for every shuffle partition of both stateful
+    *    operators). The `FileSystem` writer is also safe on HDFS and object-store
+    *    connectors: it writes a temp file and renames it; HDFS's rename
+    *    fails (returns false) when the target exists instead of replacing
+    *    it, and `renameTempFile` handles that case — a re-run batch whose
+    *    file is already there keeps the existing (identical) file, a
+    *    non-overwrite write raises "already exists". It is Spark's own
+    *    fallback when `FileContext` is unavailable for a scheme.
+    *
+    * Do NOT also set `fs.file.impl` to `RawLocalFileSystem` to skip the
+    * checksum layer: RocksDB state commits expect the checksummed
+    * `LocalFileSystem` for `file:` paths and then fail with a
+    * `ClassCastException` (`… cannot be cast to LocalFileSystem`). */
+  val Streaming: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   private val LocalMaster = "local\\[(\\d+)(?:,\\d+)?\\]".r
   private val LocalStar = "local(?:\\[\\*(?:,\\d+)?\\])?".r
@@ -72,12 +114,7 @@ object SparkSessions {
     val withMaster =
       if (sys.props.contains("spark.master") && sys.env.get("SPARK_MASTER").isEmpty) b
       else b.master(master)
-    val withState =
-      if (streaming)
-        withMaster.config("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else withMaster
-    val spark = withState.getOrCreate()
+    val spark = (if (streaming) withMaster.config(Streaming) else withMaster).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

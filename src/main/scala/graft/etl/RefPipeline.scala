@@ -43,8 +43,25 @@ object RefPipeline {
   def normalizeDevice(c: Column): Column =
     coalesce(lower(trim(c)), lit("unknown"))
 
-  /** P4–P8 + D1 (reference app.py:66–79): normalize device, uppercase
-    * country, parse timestamp, fill nulls, drop duplicate event_ids.
+  /** P4–P8 (reference app.py:66–75): normalize device, uppercase country,
+    * parse the timestamp, fill nulls — the scalar stage the batch [[clean]]
+    * and the streaming [[graft.stream.StreamPipeline.cleanStream]] share.
+    *
+    * `try_to_timestamp`: an unparseable `event_time` becomes null instead
+    * of aborting the query. Spark 4's ANSI `to_timestamp` throws
+    * `CAST_INVALID_INPUT` on it (the reference's PySpark 3.5 returned
+    * null), and in a stream one such record is a crash loop: every restart
+    * replays the same offsets. Null-time rows are then dropped by the
+    * watermark and the window stage. */
+  def cleanScalars(parsed: DataFrame): DataFrame =
+    parsed
+      .withColumn("device_norm", normalizeDevice(col("device")))
+      .withColumn("country", upper(col("country")))
+      .withColumn("event_time", try_to_timestamp(col("event_time")))
+      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
+
+  /** P4–P8 + D1 (reference app.py:66–79): [[cleanScalars]], then drop
+    * duplicate event_ids.
     *
     * Dedup semantics: the reference calls dropDuplicates BEFORE any
     * watermark (app.py:77–79), so its state is unbounded (SURVEY §2.6 ⚠).
@@ -53,12 +70,7 @@ object RefPipeline {
     * dropDuplicatesWithinWatermark — an intentional, documented deviation.
     */
   def clean(parsed: DataFrame): DataFrame =
-    parsed
-      .withColumn("device_norm", normalizeDevice(col("device")))
-      .withColumn("country", upper(col("country")))
-      .withColumn("event_time", to_timestamp(col("event_time")))
-      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
-      .dropDuplicates("event_id")
+    cleanScalars(parsed).dropDuplicates("event_id")
 
   /** Our dimension fixtures (reference app.py:87–125 shape; our values). */
   def usersDim(spark: SparkSession): DataFrame = {

@@ -25,7 +25,7 @@ object Schemas {
     StructField("user_id",    IntegerType),
     StructField("product_id", IntegerType),
     StructField("amount",     DoubleType),
-    StructField("event_time", StringType),   // ISO-8601; to_timestamp later
+    StructField("event_time", StringType),   // ISO-8601; parsed in cleanScalars
     StructField("country",    StringType),
     StructField("device",     StringType)))
 
@@ -55,7 +55,7 @@ object Schemas {
 /** Typed view of the reference event payload (pre-parse: `event_time` is
   * the raw ISO-8601 STRING, matching [[Schemas.eventPayload]] — parsing to
   * timestamp is the pipeline's job, so a typed producer still exercises
-  * the to_timestamp path). */
+  * the timestamp parse in RefPipeline.cleanScalars). */
 case class RefEvent(
     event_id:   String,
     user_id:    Option[Int],

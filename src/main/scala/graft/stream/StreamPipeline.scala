@@ -87,7 +87,7 @@ object StreamPipeline {
           (col("value") % 5 + 1).cast("int").as("user_id"),
           (col("value") % 8 + 1).cast("int").as("product_id"),
           (rand(42) * 100).as("amount"),
-          // no zone suffix: the string round-trips through to_timestamp in
+          // no zone suffix: the string round-trips through try_to_timestamp in
           // the SAME session timezone; a literal 'Z' would shift the
           // instant whenever the session isn't UTC
           date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss").as("event_time"),
@@ -97,15 +97,12 @@ object StreamPipeline {
 
   // ---------------------------------------------------------------- stages
 
-  /** Streaming clean: same scalar cleaning as [[RefPipeline.clean]] but the
-    * dedup is `dropDuplicatesWithinWatermark` AFTER the watermark, so state
-    * for an event_id is dropped once the watermark passes it. */
+  /** Streaming clean: the same [[RefPipeline.cleanScalars]] as
+    * [[RefPipeline.clean]], but the dedup is `dropDuplicatesWithinWatermark`
+    * AFTER the watermark, so state for an event_id is dropped once the
+    * watermark passes it. */
   def cleanStream(parsed: DataFrame, watermark: String = "30 seconds"): DataFrame =
-    parsed
-      .withColumn("device_norm", RefPipeline.normalizeDevice(col("device")))
-      .withColumn("country", upper(col("country")))
-      .withColumn("event_time", to_timestamp(col("event_time")))
-      .na.fill(Map("amount" -> 0.0, "country" -> "UNKNOWN", "device_norm" -> "unknown"))
+    RefPipeline.cleanScalars(parsed)
       .withWatermark("event_time", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 

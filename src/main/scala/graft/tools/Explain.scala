@@ -380,6 +380,28 @@ object Explain {
             org.apache.spark.sql.functions.col("doc_b").as("b")),
         materialize = false)))
 
+  /** Run `df` through a `noop` write and return the write's executed
+    * QueryExecution (its plan holds the final adaptive plan). Execution
+    * listeners are called from the listener bus, after the write returns. */
+  private def executedByNoopWrite(spark: SparkSession, df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.QueryExecution = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration._
+    val done = Promise[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        done.trySuccess(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        done.tryFailure(exception)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Await.result(done.future, 60.seconds)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     // --dump arg validation BEFORE the session builds (ADVICE r16): a
     // short arg list or a typo'd query name must print usage, not throw a
@@ -445,11 +467,14 @@ object Explain {
         // the FINAL adaptive plan (isFinalPlan=true) — the only place AQE
         // stage reuse (ReusedQueryStage/AQEShuffleRead) of repeated
         // subtrees is visible; the static plan shows duplicates that
-        // never execute twice. collect() runs through df's own
-        // queryExecution, so the explain below reflects the executed run.
-        if (args.headOption.contains("--dumpexec")) df.collect()
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        // never execute twice. A noop write runs it without buffering
+        // rows in the driver; the write plans its own QueryExecution (the
+        // query under an OverwriteByExpression root), which a listener
+        // captures for the explain below.
+        val qe =
+          if (args.headOption.contains("--dumpexec")) executedByNoopWrite(spark, df)
+          else df.queryExecution
+        val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"$name$suffix.txt"),
           plan.getBytes("UTF-8"))

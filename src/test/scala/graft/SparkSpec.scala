@@ -8,6 +8,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `f` with `confs` set on the shared session, then restore each
+    * key's previous value (or unset it). The shared session runs Spark's
+    * defaults; a test of the shipped streaming config wraps itself in
+    * `withConfs(SparkSessions.Streaming)`. */
+  def withConfs[A](confs: Map[String, String])(f: => A): A = {
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpec {

@@ -9,9 +9,10 @@ import graft.SparkSpec
 /**
  * Property-based contract tests (SURVEY §5.2-3): generators mirror the
  * reference producer's dirt (null country/device/amount, duplicate ids —
- * producer.py:30–42); properties are the §1.4 invariants. Sampling is
- * seeded, so failures reproduce. (Raw scalacheck Gen — the scalatestplus
- * bridge isn't on the offline classpath.)
+ * producer.py:30–42 — plus an unparseable `event_time`); properties are
+ * the §1.4 invariants. Sampling is seeded, so failures reproduce. (Raw
+ * scalacheck Gen — the scalatestplus bridge isn't on the offline
+ * classpath.)
  */
 class CleanPropertySpec extends SparkSpec {
   import spark.implicits._
@@ -19,22 +20,33 @@ class CleanPropertySpec extends SparkSpec {
   private def samples[A](gen: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => gen.apply(Gen.Parameters.default, Seed(42L + i)))
 
-  private val genEvent: Gen[(String, Int, Option[Double], String, String)] = for {
+  private val ValidTime = "2024-01-01T00:00:00Z"
+
+  private val genEvent: Gen[(String, Int, Option[Double], String, String, String)] = for {
     id      <- Gen.chooseNum(0, 30).map(n => s"evt_$n")   // small space ⇒ dups likely
     user    <- Gen.chooseNum(1, 5)
     amount  <- Gen.option(Gen.chooseNum(1.0, 200.0))
     country <- Gen.oneOf("IN", "US", "DE", "in", "us", null)
     device  <- Gen.oneOf("MOBILE", "mobile ", "DESKTOP", " TABLET ", "", null)
-  } yield (id, user, amount, country, device)
+    time    <- Gen.frequency(9 -> Gen.const(ValidTime), 1 -> Gen.const("garbage"))
+  } yield (id, user, amount, country, device, time)
 
   private val genBatch = Gen.listOfN(40, genEvent)
 
   test("clean upholds the §1.4 contract on 10 arbitrary dirty batches") {
-    samples(genBatch, 10).foreach { rows =>
-      val df = rows.toDF("event_id", "user_id", "amount", "country", "device")
-        .withColumn("event_time", lit("2024-01-01T00:00:00Z"))
+    val batches = samples(genBatch, 10)
+    assert(batches.flatten.exists(_._6 == "garbage"), "no unparseable time sampled")
+    batches.foreach { rows =>
+      val df = rows.toDF("event_id", "user_id", "amount", "country", "device", "event_time")
         .withColumn("product_id", lit(1))
       val cleaned = RefPipeline.clean(df).cache()
+      // an unparseable event_time becomes null instead of aborting the job;
+      // a valid one parses, and only ids that had a garbage time can be null
+      val garbageIds = rows.filter(_._6 == "garbage").map(_._1).toSet
+      val times = cleaned.select("event_id", "event_time").as[(String, java.sql.Timestamp)].collect()
+      assert(times.forall { case (id, t) =>
+        if (t == null) garbageIds(id) else t.toInstant == java.time.Instant.parse(ValidTime)
+      }, times.mkString(","))
       // no nulls in the contract columns
       assert(cleaned.filter(
         col("amount").isNull || col("country").isNull || col("device_norm").isNull).isEmpty)

@@ -114,21 +114,29 @@ class StreamPipelineSpec extends SparkSpec {
     q.stop()
   }
 
+  /** One AvailableNow drain of the file-source pipeline into a parquet
+    * sink: the K1 wiring StreamRunner deploys. */
+  private def drainFiles(inDir: String, outDir: String, chkDir: String): Unit = {
+    val out = StreamPipeline.plan(spark, StreamPipeline.read(spark, StreamPipeline.JsonFiles(inDir)))
+    val q = StreamPipeline.writer(out,
+      StreamPipeline.ParquetSink(outDir, chkDir, Trigger.AvailableNow())).start()
+    assert(q.awaitTermination(60000), "query did not drain in time")
+  }
+
+  private def writeLines(dir: String, file: String, lines: String*): Unit =
+    Files.write(java.nio.file.Paths.get(dir, file), java.util.Arrays.asList(lines: _*))
+
   test("file-source → parquet sink end-to-end: country-partitioned layout, checkpointed") {
     val inDir = Files.createTempDirectory("graft_in").toString
     val outDir = Files.createTempDirectory("graft_out").toString
     val chkDir = Files.createTempDirectory("graft_chk").toString
     // seed: events across two countries, plus one event far ahead so the
     // watermark closes the first windows
-    Files.write(java.nio.file.Paths.get(s"$inDir/batch1.json"), java.util.Arrays.asList(
+    writeLines(inDir, "batch1.json",
       json("a", "2024-01-01T00:00:10Z", 10.0, 1, "in"),
       json("b", "2024-01-01T00:00:20Z", 20.0, 2, "us"),
-      json("c", "2024-01-01T00:30:00Z", 5.0, 3, "de")))
-
-    val out = StreamPipeline.plan(spark, StreamPipeline.read(spark, StreamPipeline.JsonFiles(inDir)))
-    val q = StreamPipeline.writer(out,
-      StreamPipeline.ParquetSink(outDir, chkDir, Trigger.AvailableNow())).start()
-    q.awaitTermination(60000)
+      json("c", "2024-01-01T00:30:00Z", 5.0, 3, "de"))
+    drainFiles(inDir, outDir, chkDir)
 
     val written = spark.read.parquet(outDir)
     assert(written.count() >= 2)
@@ -141,36 +149,77 @@ class StreamPipelineSpec extends SparkSpec {
   }
 
   test("restart from checkpoint resumes incrementally — no reprocessing (T5 exactly-once)") {
-    val inDir = Files.createTempDirectory("graft_restart_in").toString
-    val outDir = Files.createTempDirectory("graft_restart").toString + "/out"
-    val chkDir = Files.createTempDirectory("graft_restart_chk").toString
+    withConfs(graft.SparkSessions.Streaming) {
+      val inDir = Files.createTempDirectory("graft_restart_in").toString
+      val outDir = Files.createTempDirectory("graft_restart").toString + "/out"
+      val chkDir = Files.createTempDirectory("graft_restart_chk").toString
 
-    def runOnce(): Unit = {
-      val out = StreamPipeline.plan(spark, StreamPipeline.read(spark, StreamPipeline.JsonFiles(inDir)))
-      val q = StreamPipeline.writer(out,
-        StreamPipeline.ParquetSink(outDir, chkDir, Trigger.AvailableNow())).start()
-      q.awaitTermination(60000)
+      // run 1: two events + a late watermark-advancer → 1 user-window emitted ×2 slides
+      writeLines(inDir, "b1.json",
+        json("a", "2024-01-01T00:00:10Z", 10.0),
+        json("w1", "2024-01-01T01:00:00Z", 1.0))
+      drainFiles(inDir, outDir, chkDir)
+      val afterFirst = spark.read.parquet(outDir).count()
+      assert(afterFirst > 0)
+
+      // run 2 (fresh query, SAME checkpoint): only the NEW file is processed;
+      // previously-emitted windows are not re-emitted
+      writeLines(inDir, "b2.json",
+        json("b", "2024-01-01T02:00:00Z", 20.0),
+        json("w2", "2024-01-01T03:00:00Z", 1.0))
+      drainFiles(inDir, outDir, chkDir)
+      val afterSecond = spark.read.parquet(outDir)
+      // event 'a' windows appear exactly once across both runs
+      assert(afterSecond.filter($"total_amount" === 10.0).count() == 2,
+        "event a must appear in exactly its 2 sliding windows, not re-emitted")
+      assert(afterSecond.count() > afterFirst)
     }
+  }
 
-    // run 1: two events + a late watermark-advancer → 1 user-window emitted ×2 slides
-    Files.write(java.nio.file.Paths.get(s"$inDir/b1.json"), java.util.Arrays.asList(
-      json("a", "2024-01-01T00:00:10Z", 10.0),
-      json("w1", "2024-01-01T01:00:00Z", 1.0)))
-    runOnce()
-    val afterFirst = spark.read.parquet(outDir).count()
-    assert(afterFirst > 0)
+  test("crash between sink write and commit: restart re-runs the batch, output identical") {
+    withConfs(graft.SparkSessions.Streaming) {
+      // run 1's file leaves open windows and dedup state behind; run 2's
+      // file repeats an id inside the watermark and closes every window
+      val b1 = Seq(
+        json("a", "2024-01-01T00:00:10Z", 10.0, 1, "in"),
+        json("b", "2024-01-01T00:00:20Z", 20.0, 2, "us"),
+        json("w1", "2024-01-01T00:01:30Z", 1.0, 3, "de"))
+      val b2 = Seq(
+        json("w1", "2024-01-01T00:01:35Z", 500.0, 3, "de"),
+        json("c", "2024-01-01T00:01:40Z", 7.0, 4, "us"),
+        json("w2", "2024-01-01T00:10:00Z", 1.0, 5, "in"))
 
-    // run 2 (fresh query, SAME checkpoint): only the NEW file is processed;
-    // previously-emitted windows are not re-emitted
-    Files.write(java.nio.file.Paths.get(s"$inDir/b2.json"), java.util.Arrays.asList(
-      json("b", "2024-01-01T02:00:00Z", 20.0),
-      json("w2", "2024-01-01T03:00:00Z", 1.0)))
-    runOnce()
-    val afterSecond = spark.read.parquet(outDir)
-    // event 'a' windows appear exactly once across both runs
-    assert(afterSecond.filter($"total_amount" === 10.0).count() == 2,
-      "event a must appear in exactly its 2 sliding windows, not re-emitted")
-    assert(afterSecond.count() > afterFirst)
+      def sinkRows(outDir: String): Seq[String] =
+        spark.read.parquet(outDir).collect().map(_.toString).toSeq.sorted
+
+      def run(crash: Boolean): Seq[String] = {
+        val inDir = Files.createTempDirectory("graft_crash_in").toString
+        val outDir = Files.createTempDirectory("graft_crash").toString + "/out"
+        val chkDir = Files.createTempDirectory("graft_crash_chk").toString
+        writeLines(inDir, "b1.json", b1: _*)
+        drainFiles(inDir, outDir, chkDir)
+        val commits = new java.io.File(chkDir, "commits")
+        val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+        if (crash) {
+          // the sink logged the last batch, but its commit never landed:
+          // remove commits/N (and its checksum) as a crash would leave it
+          assert(new java.io.File(outDir, s"_spark_metadata/$last").exists(),
+            s"the sink did not log batch $last before the simulated crash")
+          Seq(s"$last", s".$last.crc").map(new java.io.File(commits, _))
+            .filter(_.exists()).foreach(f => assert(f.delete(), s"cannot delete $f"))
+        }
+        writeLines(inDir, "b2.json", b2: _*)
+        drainFiles(inDir, outDir, chkDir)
+        assert(new java.io.File(commits, s"$last").exists(),
+          s"batch $last was not re-run and committed after the restart")
+        sinkRows(outDir)
+      }
+
+      val uninterrupted = run(crash = false)
+      assert(uninterrupted.nonEmpty)
+      assert(run(crash = true) == uninterrupted,
+        "re-running the uncommitted batch changed the sink output")
+    }
   }
 
   test("update-mode memory sink emits unfinalized windows (K2 semantics)") {

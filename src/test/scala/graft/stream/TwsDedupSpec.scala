@@ -4,11 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSessions, SparkSpec}
 
 /** transformWithState first-seen dedup: within-batch and cross-run
-  * duplicate drops, with RocksDB-backed state surviving a query restart
-  * over the same checkpoint.
+  * duplicate drops, with RocksDB-backed state (the shipped streaming conf:
+  * changelog checkpoints, FileSystem checkpoint writer) surviving a query
+  * restart over the same checkpoint.
   *
   * Methodology note (pins the Spark 4.1.2 behavior the operator's
   * scaladoc documents): in ProcessingTime time-mode — which TTL requires —
@@ -22,20 +23,8 @@ import graft.SparkSpec
 class TwsDedupSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withRocksDb[A](f: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("first occurrence survives; dups drop within batch AND across restarts") {
-    withRocksDb {
+    withConfs(SparkSessions.Streaming) {
       val in = Files.createTempDirectory("tws_in").toString
       val out = Files.createTempDirectory("tws_out").toString
       val chk = Files.createTempDirectory("tws_chk").toString

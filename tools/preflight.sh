@@ -8,6 +8,7 @@
 #
 # Usage:  tools/preflight.sh          # compile gate only (~30 s warm)
 #         tools/preflight.sh --test   # compile gate + full ScalaTest suite
+#                                     #   + the perfbench harness tests
 #         tools/preflight.sh --full   # + Verify/oracle @ sf0.01 + one Bench
 #                                     #   pass @ sf0.01 (the driver's t2/t3
 #                                     #   surfaces, ~5 min total)
@@ -20,6 +21,8 @@ sbt -batch Test/compile
 if [[ "${1:-}" == "--test" || "${1:-}" == "--full" ]]; then
   echo "[preflight] sbt test ..."
   sbt -batch test
+  echo "[preflight] perfbench harness tests ..."
+  (cd perfbench && sbt -batch test)
 fi
 
 if [[ "${1:-}" == "--full" ]]; then
